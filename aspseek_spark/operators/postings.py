@@ -21,15 +21,18 @@ re-expression:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import spark_pmod_xxhash64
 from .textstats import tokens_col
 
-# (word, n_buckets) → bucket id memo for probe_postings_bucketed — a pure
-# function of its key (xxhash64 is deterministic), never invalidated
-_BUCKET_MEMO: dict[tuple[str, int], int] = {}
+# (word, n_buckets) → bucket id for probe_postings_bucketed — a pure
+# function of its key (xxhash64 is deterministic), so a bounded LRU memo is
+# exact; the bound keeps a long-lived searchd's memory flat
+_word_bucket = functools.lru_cache(maxsize=1 << 16)(spark_pmod_xxhash64)
 
 
 def build_postings(
@@ -589,12 +592,7 @@ def probe_postings_bucketed(
     # bit-for-bit) and memoized — until r07 this was a 1-row Spark job per
     # probe call, ~0.2-0.3 s of pure driver latency on EVERY cold search
     # entry (guide §1/§5: the driver should do no data work on a hot path).
-    buckets = sorted({
-        _BUCKET_MEMO.setdefault(
-            (t, n_buckets), spark_pmod_xxhash64(t, n_buckets)
-        )
-        for t in lowered
-    })
+    buckets = sorted({_word_bucket(t, n_buckets) for t in lowered})
     reader = spark.read if schema is None else spark.read.schema(schema)
     probe = reader.parquet(path).filter(
         F.col("word_bucket").isin(buckets) & F.col("word").isin(lowered)

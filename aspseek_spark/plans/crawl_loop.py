@@ -16,7 +16,10 @@ is the default for deterministic ordering.
 
 from __future__ import annotations
 
+import gc
+import os
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -24,6 +27,38 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..sources.tables import StateStore
 from .crawl_round import init_state, run_round
+
+# Workers of the one executor a CrawlJob runs all background work on. The
+# size is the round's peak of concurrently RUNNING submissions, so nothing
+# that used to start at once now queues: during the snapshot write the 2
+# pre-write metric counts and the 4 table writes run side by side, while
+# the previous round's realtime absorb may still be running (1).
+ROUND_WORKERS = 2 + 4 + 1
+
+
+class _PhaseMarks:
+    """The round's phase recorder: ``mark(label)`` stamps the wall time since
+    the round started, from any thread; ``report()`` prints the marks as one
+    ``[round N timing] label+Δs ...`` line when ASPSEEK_TIMING=1."""
+
+    def __init__(self, round_id: int):
+        self.round_id = round_id
+        self.on = os.environ.get("ASPSEEK_TIMING") == "1"
+        self.t0 = time.time()
+        self.marks: list[tuple[float, str]] = []
+
+    def mark(self, label: str) -> None:
+        if self.on:
+            self.marks.append((time.time() - self.t0, label))
+
+    def report(self) -> None:
+        if not self.on:
+            return
+        parts, prev = [], 0.0
+        for t, label in sorted(self.marks):
+            parts.append(f"{label}+{t - prev:.1f}s")
+            prev = t
+        print(f"[round {self.round_id} timing] " + " ".join(parts), flush=True)
 
 
 class CrawlJob:
@@ -48,16 +83,20 @@ class CrawlJob:
         # appended to its realtime tier, making just-crawled pages
         # searchable immediately (the reference's crawl-then-search cycle
         # through realtime tables; its rt_max_segments policy decides when
-        # segments fold into the main index). The periodic ABSORB runs on
-        # this single background thread (round-5 verdict next-round #3 —
+        # segments fold into the main index). The periodic ABSORB runs in
+        # the background on self._pool (round-5 verdict next-round #3 —
         # it used to run inline inside add_realtime, putting an
         # O(accumulated delta) merge on the crawl round's critical path);
         # SearchJob._rt_lock serializes it against the next rounds'
         # appends, so the absorb overlaps their schedule/fetch phases and
         # only a colliding append blocks.
         self.realtime_index = realtime_index
-        self._rt_pool = None
         self._rt_absorb_fut = None
+        # every piece of background work — the round's overlapped jobs and
+        # the absorb — runs here (ROUND_WORKERS)
+        self._pool = ThreadPoolExecutor(
+            max_workers=ROUND_WORKERS, thread_name_prefix="crawl"
+        )
 
     def _tune_scan_splits(self) -> None:
         """r07 (guide §6 input split size, §2 scale-adaptive partitioning):
@@ -73,11 +112,9 @@ class CrawlJob:
         change results (row-group assignment is deterministic; all crawl
         ordering is pinned) — fetch-order/resume suites prove it."""
         try:
-            import os as _os
-
             total = 0
             for f in self.pages.inputFiles():
-                total += _os.path.getsize(
+                total += os.path.getsize(
                     f[len("file:"):] if f.startswith("file:") else f
                 )
             par = max(1, self.spark.sparkContext.defaultParallelism)
@@ -89,8 +126,6 @@ class CrawlJob:
             pass  # unknown layout (e.g. live connector): keep defaults
 
     def _submit_absorb(self) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         # round-6 verdict "wrong" #1 (exception-loss window): never
         # overwrite a live future. A PREVIOUS absorb that already finished
         # is joined first — join_realtime RAISES a stored failure here, in
@@ -104,11 +139,7 @@ class CrawlJob:
             if not fut.done():
                 return
             self.join_realtime()
-        if self._rt_pool is None:
-            self._rt_pool = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="rt_absorb"
-            )
-        self._rt_absorb_fut = self._rt_pool.submit(
+        self._rt_absorb_fut = self._pool.submit(
             self.realtime_index.merge_realtime
         )
 
@@ -139,8 +170,7 @@ class CrawlJob:
             bloom=st.bloom,
             seen_delta=st.seen_delta,
             robots_delta=st.robots_delta,
-            fetched=None,
-            metrics=None,
+            executor=self._pool,
         )
 
     def _ensure_bloom_format(self, last: int) -> None:
@@ -178,12 +208,10 @@ class CrawlJob:
         leftover backlog. ADVISORY, outside the snapshot commit on purpose:
         a missing/stale file only means a host uses the default salt — the
         schedule is salt-invariant, so correctness can't depend on it."""
-        import os as _os
-
         if not self.config.adaptive_salt:
             return None
         p = self.store._p("host_salts", round_id)
-        if not _os.path.exists(p):
+        if not os.path.exists(p):
             return None
         return self.spark.read.schema("host string, salt int").parquet(p)
 
@@ -216,7 +244,32 @@ class CrawlJob:
         ).parquet(self.store._p("host_salts", round_id))
 
     def run_one(self, round_id: int) -> dict:
-        """Execute round ``round_id`` (state from round_id-1) and commit."""
+        """Execute round ``round_id`` (state from round_id-1) and commit.
+
+        Everything the round runs in the background goes through
+        ``self._pool`` and is tracked here, so a failing round has ONE drain
+        path: wait for every job it submitted (no write or checkpoint
+        outlives the round and races the caller's cleanup or retry), then
+        re-raise the original error."""
+        phases = _PhaseMarks(round_id)
+        submitted: list = []
+        try:
+            metrics = self._round(round_id, submitted, phases.mark)
+        except BaseException:
+            wait(submitted)
+            raise
+        phases.report()
+        return metrics
+
+    def _round(self, round_id: int, submitted: list, mark) -> dict:
+        """The round itself; every future it starts is appended to
+        ``submitted`` for run_one's drain."""
+
+        def submit(fn, *args):
+            fut = self._pool.submit(fn, *args)
+            submitted.append(fut)
+            return fut
+
         t0 = time.time()
         prev = round_id - 1
         frontier = self.store.read_frontier(prev)
@@ -230,68 +283,39 @@ class CrawlJob:
 
         # early-write overlap (round-4 verdict next-round #7): fetched/links
         # depend only on the parse checkpoint, so run_round submits their
-        # writes through this pool DURING the seen/new-urls phase; the
-        # futures are joined below before write_round publishes.
-        from concurrent.futures import ThreadPoolExecutor as _TPE
+        # writes DURING the seen/new-urls phase; the futures are joined
+        # below before write_round publishes.
+        res = run_round(
+            self.spark, round_id, self.config,
+            frontier, seen, bloom, robots, self.pages, self.robots_src,
+            fetcher=self.fetcher, host_salts=host_salts,
+            submit=submit, write_table=self.store.write_table, mark=mark,
+        )
 
-        early_pool = _TPE(max_workers=2)
-
-        def _early_write(name, df):
-            return early_pool.submit(
-                self.store.write_table, name, round_id, df
-            )
-
-        import os
-
-        timing = os.environ.get("ASPSEEK_TIMING") == "1"
-        marks: list[tuple[str, float]] = []
-
-        def mark(label: str) -> None:
-            if timing:
-                marks.append((label, time.time() - t0))
-
-        # the pool must not outlive a failed round (round-5 ADVICE low:
-        # an exception between submit and join leaked the threads and let
-        # an in-flight write race the caller's cleanup) — shutdown runs on
-        # EVERY exit; wait=True on the failure path so no write is still
-        # running when the exception propagates
-        try:
-            res = run_round(
-                self.spark, round_id, self.config,
-                frontier, seen, bloom, robots, self.pages, self.robots_src,
-                fetcher=self.fetcher, host_salts=host_salts,
-                early_write=_early_write,
-            )
-            marks.insert(0, ("plan", time.time() - t0))
-
-            # Round-2 job structure (cuts the serial barrier floor ~2×):
-            #   job A (inside run_round): scheduled.count — materializes the
-            #     frontier-scan → robots → politeness-window chain and picks
-            #     the fetch-join strategy from the measured batch size.
-            #   job B: new_urls.count — materializes fetch join, parse, bloom
-            #     probe and the seen backstop in one pass (their persists
-            #     fill during this single action, so later broadcast builds
-            #     collect cached blocks instead of re-running heavy work
-            #     inside a broadcast-build job, where AQE may coalesce to one
-            #     partition — observed 20s single-task builds in round 1).
-            #   then ALL table writes run as concurrent jobs over cached data
-            #     (the frontier write doubles as its materialization), and
-            #     the remaining metrics counts are cheap cached-scan jobs.
-            n_sched = res.n_sched  # materialized by run_round (job A)
-            mark("scheduled.materialize")
-            n_new = res.new_urls.count()
-            mark("new_urls.materialize")
-            res.frontier.persist()
-            # join the early fetched/links writes (usually already finished —
-            # they overlapped the whole seen/new-urls phase) BEFORE
-            # write_round, so the manifest publish still happens strictly
-            # after every write; a failure raises here, pre-publish
-            for fut in res.early_futures or []:
-                fut.result()
-        except BaseException:
-            early_pool.shutdown(wait=True)
-            raise
-        early_pool.shutdown(wait=False)
+        # Round-2 job structure (cuts the serial barrier floor ~2×):
+        #   job A (inside run_round): scheduled.count — materializes the
+        #     frontier-scan → robots → politeness-window chain and picks
+        #     the fetch-join strategy from the measured batch size.
+        #   job B: new_urls.count — materializes fetch join, parse, bloom
+        #     probe and the seen backstop in one pass (their persists
+        #     fill during this single action, so later broadcast builds
+        #     collect cached blocks instead of re-running heavy work
+        #     inside a broadcast-build job, where AQE may coalesce to one
+        #     partition — observed 20s single-task builds in round 1).
+        #   then ALL table writes run as concurrent jobs over cached data
+        #     (the frontier write doubles as its materialization), and
+        #     the remaining metrics counts are cheap cached-scan jobs.
+        n_sched = res.n_sched  # materialized by run_round (job A)
+        n_new = res.new_urls.count()
+        mark("new_urls.materialize")
+        res.frontier.persist()
+        # join everything run_round submitted — the early fetched/links
+        # writes, usually already finished: they overlapped the whole
+        # seen/new-urls phase — BEFORE write_round, so the manifest publish
+        # still happens strictly after every write; a failure raises here,
+        # pre-publish
+        for fut in submitted:
+            fut.result()
         mark("early_writes.join")
         # r07 (guide §2.6, overlap independent jobs): the metrics counts
         # that depend ONLY on this round's checkpointed outputs — n_ok
@@ -301,8 +325,6 @@ class CrawlJob:
         # Only probe metrics (reads the WRITTEN bloom parquet) and the
         # frontier count (rides the cache its write job fills) stay
         # post-write.
-        from concurrent.futures import ThreadPoolExecutor
-
         from ..operators.seen import bloom_metrics
 
         def _n_ok():
@@ -312,32 +334,18 @@ class CrawlJob:
             if self.config.adaptive_salt and res.leftover is not None:
                 self._write_host_salts(round_id, res.leftover)
 
-        pre_pool = ThreadPoolExecutor(max_workers=2)
-        f_ok = pre_pool.submit(_n_ok)
-        f_salts = pre_pool.submit(_salts)
-        pre_pool.shutdown(wait=False)
-        try:
-            self.store.write_round(
-                round_id, self.config,
-                frontier=res.frontier,
-                bloom=res.bloom,
-                seen_delta=res.seen_delta,
-                robots_delta=res.robots_delta,
-                fetched=None if res.early_futures else res.fetched,
-                metrics=None,  # written below from committed-state counts
-                links=None if res.early_futures else res.links,
-                on_table_written=mark if timing else None,
-            )
-        except BaseException:
-            # never leak the overlapped metric jobs past a failed round
-            # (round-5 ADVICE: no pool outlives its round) — drain, then
-            # surface the WRITE failure, not a secondary metric error
-            for f in (f_ok, f_salts):
-                try:
-                    f.result()
-                except Exception:
-                    pass
-            raise
+        f_ok = submit(_n_ok)
+        f_salts = submit(_salts)
+        self.store.write_round(
+            round_id, self.config,
+            frontier=res.frontier,
+            bloom=res.bloom,
+            seen_delta=res.seen_delta,
+            robots_delta=res.robots_delta,
+            executor=self._pool,
+            mark=mark,
+        )
+
         # remaining metrics: probe scalars (need the written bloom) and the
         # frontier count (cache filled by its write job) — still concurrent
         # with each other; n_ok/salts joined from the pre-write overlap
@@ -356,11 +364,10 @@ class CrawlJob:
                 return 0.0, int(row["keys"] or 0)
             return bloom_metrics(self.store.read_bloom(round_id))
 
-        with ThreadPoolExecutor(max_workers=2) as mpool:
-            f_size = mpool.submit(_frontier_size)
-            f_probe = mpool.submit(_probe_metrics)
-            frontier_size = f_size.result()
-            fill, bloom_keys = f_probe.result()
+        f_size = submit(_frontier_size)
+        f_probe = submit(_probe_metrics)
+        frontier_size = f_size.result()
+        fill, bloom_keys = f_probe.result()
         n_ok = f_ok.result()
         f_salts.result()
         mark("metrics.concurrent")
@@ -410,7 +417,7 @@ class CrawlJob:
             # restart-safe: a crash here only delays searchability until
             # the caller re-appends). The append is O(delta) and stays
             # synchronous; the periodic absorb does NOT (defer_merge) —
-            # it runs on the background thread and overlaps the next
+            # it runs on self._pool in the background and overlaps the next
             # round instead of stepping this round's wall time.
             self.realtime_index.add_realtime(
                 self.spark.read.parquet(self.store._p("fetched", round_id)),
@@ -419,12 +426,6 @@ class CrawlJob:
             mark("realtime.append")
             if self.realtime_index.needs_absorb():
                 self._submit_absorb()
-        if timing:
-            deltas = [
-                f"{label}+{t - prev:.1f}s"
-                for (label, t), (_, prev) in zip(marks, [("", 0.0)] + marks[:-1])
-            ]
-            print(f"[round {round_id} timing] " + " ".join(deltas), flush=True)
         for df in res.persisted or []:
             df.unpersist()
         res.frontier.unpersist()
@@ -432,8 +433,6 @@ class CrawlJob:
         # so the ContextCleaner frees their blocks before the next round's
         # text lands (bounded memory across arbitrarily many rounds)
         del res
-        import gc
-
         gc.collect()
         return metrics
 

@@ -24,7 +24,9 @@ searchd split re-expressed; deliberately netcat-debuggable):
                                "wrong" #2: the daemon NEVER collects an
                                unbounded hit set — every Q/QP serves a
                                bounded TakeOrdered window, the reference's
-                               paged result window (ps=/np= in s.cgi))
+                               paged result window (ps=/np= in s.cgi));
+                               a window ending past MAX_RESULT_WINDOW
+                               rows is refused with ERR
     R <terms...>               rendered results page (s.htm template)
       → PAGE <nbytes>\\n  then exactly nbytes of UTF-8 HTML, then .\\n
     S                          daemon/qcache stats
@@ -46,6 +48,10 @@ import threading
 from pyspark.sql import functions as F
 
 from .search_job import SearchJob
+
+# deepest result row a QP page may reach: the daemon collects
+# (page+1)·size rows to serve one page, so the page number is capped too
+MAX_RESULT_WINDOW = 10_000
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -109,6 +115,9 @@ class _Handler(socketserver.StreamRequestHandler):
             self._err(
                 f"page must be >= 0 and 0 < size <= {daemon.max_page_size}"
             )
+            return
+        if (page + 1) * size > MAX_RESULT_WINDOW:
+            self._err(f"(page+1)*size must be <= {MAX_RESULT_WINDOW}")
             return
         self._serve_page(daemon, parts[2], page, size)
 

@@ -21,8 +21,6 @@ Table layouts (all parquet, explicit schemas — FIXTURES.md):
                         existing version dirs byte-identical. The manifest
                         maps fpart → owning round per committed round —
                         exactly Iceberg's partition-overwrite snapshot model.
-                        (Legacy whole-snapshot stores under frontier/round=N
-                        are still readable.)
   bloom/round=N/        snapshot per round (P blob rows; tiny)
   seen_delta/round=N/   append-only — only NEW urls each round, so per-round
                         write cost is O(new), not O(total); the logical
@@ -37,9 +35,6 @@ Table layouts (all parquet, explicit schemas — FIXTURES.md):
   robots_delta/round=N/ append-only robots-cache additions
   fetched/round=N/      append-only crawl output (+ extracted text)
   metrics/round=N/      append-only per-round lineage + metrics [B:14]
-
-Use ``use_iceberg=True`` to route through a real Iceberg catalog when jars
-are present (feature-flag seam; raises cleanly here).
 """
 
 from __future__ import annotations
@@ -48,6 +43,7 @@ import hashlib
 import json
 import os
 import shutil
+from concurrent.futures import Executor, wait
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,12 +113,7 @@ def probe_state_schema(config: CrawlConfig) -> T.StructType:
 class StateStore:
     """Directory-backed snapshot store with atomic manifest publish."""
 
-    def __init__(self, root: str, spark: SparkSession, use_iceberg: bool = False):
-        if use_iceberg:
-            raise NotImplementedError(
-                "Iceberg jars not present in this image; parquet+manifest "
-                "emulation active (same commit protocol)."
-            )
+    def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
         os.makedirs(root, exist_ok=True)
@@ -168,8 +159,8 @@ class StateStore:
 
     def write_table(self, name: str, round_id: int, df) -> None:
         """One plain snapshot-table write — the early-write overlap path
-        (plans/crawl_round ``early_write``): fetched/links writes start
-        during the seen/new-urls phase instead of the write pool. Running
+        (plans/crawl_round ``write_table``): fetched/links writes start
+        during the seen/new-urls phase instead of the write phase. Running
         pre-publish is safe for the same reason the in-pool bucketed-seen
         append is: round logic is deterministic (a crashed-then-retried
         round re-derives and overwrites the same delta) and every reader
@@ -182,8 +173,7 @@ class StateStore:
         return os.path.join(self.root, "frontier_rounds", f"round={round_id}")
 
     def frontier_map(self, round_id: int) -> dict[int, int] | None:
-        """fpart → owning-round map for ``round_id``; None = legacy layout
-        (whole-snapshot store written before partitioning existed)."""
+        """fpart → owning-round map for ``round_id``; None = not committed."""
         if not os.path.exists(self._manifest_path):
             return None
         with open(self._manifest_path) as f:
@@ -400,86 +390,77 @@ class StateStore:
         bloom: DataFrame,
         seen_delta: DataFrame,
         robots_delta: DataFrame,
-        fetched: DataFrame | None,
-        metrics: DataFrame | None,
-        links: DataFrame | None = None,
-        on_table_written=None,
+        executor: Executor,
+        mark=None,
     ) -> None:
-        def _done(label: str) -> None:
-            if on_table_written is not None:
-                on_table_written(f"write.{label}")
+        """Write the round's four snapshot tables, then publish the manifest.
 
-        # The snapshot's six tables are independent once the shared upstream
-        # lineage is materialized (the caller persists + counts it first), so
-        # their write jobs are submitted CONCURRENTLY — Spark schedules
-        # concurrent jobs fine, and overlapping the per-job fixed latencies
-        # cuts the serial floor of a round by ~3×. The manifest publish
-        # (the commit point) still happens strictly after every write.
-        from concurrent.futures import ThreadPoolExecutor
-
-        jobs: list[tuple[str, DataFrame]] = [
-            ("bloom", bloom),
-            ("seen_delta", seen_delta),
-            ("robots_delta", robots_delta),
-        ]
-        if fetched is not None:
-            jobs.append(("fetched", fetched))
-        if links is not None:
-            jobs.append(("links", links))
-
+        The tables are independent once the shared upstream lineage is
+        materialized (the caller persists + counts it first), so their
+        write jobs run CONCURRENTLY on ``executor`` — overlapping the
+        per-job fixed latencies cuts the serial floor of a round by ~3×.
+        Every write finishes before the manifest publish (the commit
+        point), and before any failure propagates. ``mark`` (callable(label))
+        is the caller's phase recorder. The round's ``fetched``/``links``
+        tables are written earlier through ``write_table``."""
+        if mark is None:
+            mark = lambda label: None  # noqa: E731
         new_map: dict[int, int] = {}
 
-        def _write(item: tuple[str, DataFrame]) -> None:
-            name, df = item
-            if name == "frontier":
-                # partitioned write: only touched fparts (see module doc)
-                new_map.update(
-                    self._write_frontier_partitioned(round_id, config, df)
-                )
-            elif name == "seen_delta":
-                df.write.mode("overwrite").parquet(self._p(name, round_id))
-                _done(name)
-                # chain the bucketed-backstop append onto the delta write,
-                # INSIDE the pool so its latency overlaps the other table
-                # writes. Running it pre-publish is safe: round logic is
-                # deterministic (a retried round re-derives the same delta),
-                # the table is consumed membership-only, and every read
-                # filters round_added <= last-committed — rows from a
-                # crashed-then-retried attempt are invisible until the
-                # round actually commits, and the marker stops them from
-                # being appended twice.
-                self._sync_seen_bucketed(round_id, config)
-                name = "seen_bucketed"
-            else:
-                df.write.mode("overwrite").parquet(self._p(name, round_id))
-            _done(name)
+        def _frontier() -> None:
+            # partitioned write: only touched fparts (see module doc)
+            new_map.update(
+                self._write_frontier_partitioned(round_id, config, frontier)
+            )
 
-        with ThreadPoolExecutor(max_workers=len(jobs) + 1) as pool:
-            # list() re-raises any write failure before the manifest publish
-            list(pool.map(_write, [("frontier", frontier)] + jobs))
+        def _seen_delta() -> None:
+            seen_delta.write.mode("overwrite").parquet(
+                self._p("seen_delta", round_id)
+            )
+            mark("write.seen_delta")
+            # chain the bucketed-backstop append onto the delta write so its
+            # latency overlaps the other table writes. Running it pre-publish
+            # is safe: round logic is deterministic (a retried round
+            # re-derives the same delta), the table is consumed
+            # membership-only, and every read filters round_added <=
+            # last-committed — rows from a crashed-then-retried attempt are
+            # invisible until the round actually commits, and the marker
+            # stops them from being appended twice.
+            self._sync_seen_bucketed(round_id, config)
 
-        if metrics is not None:
-            metrics.write.mode("overwrite").parquet(self._p("metrics", round_id))
+        def _write(label: str, fn, *args) -> None:
+            fn(*args)
+            mark(f"write.{label}")
+
+        futs = [
+            executor.submit(_write, "frontier", _frontier),
+            executor.submit(_write, "bloom", self.write_table, "bloom",
+                            round_id, bloom),
+            executor.submit(_write, "seen_bucketed", _seen_delta),
+            executor.submit(_write, "robots_delta", self.write_table,
+                            "robots_delta", round_id, robots_delta),
+        ]
+        wait(futs)
+        for f in futs:
+            f.result()  # re-raises a write failure before the publish
+
         # keep the previous round's map for time travel (resume window = 2)
         kept_maps = {round_id: new_map}
         prev_map = self.frontier_map(round_id - 1)
         if prev_map is not None:
             kept_maps[round_id - 1] = prev_map
         self._publish(round_id, config, frontier_maps=kept_maps)
-        # (bucketed-seen sync already ran inside the write pool, chained on
-        # the seen_delta write; a crash anywhere is healed by
+        # (bucketed-seen sync already ran concurrently, chained on the
+        # seen_delta write; a crash anywhere is healed by
         # read_seen_bucketed's marker-driven catch-up)
         # snapshot GC (Iceberg: expire_snapshots): unreferenced frontier
-        # version dirs + all-but-last-2 bloom snapshots (and any legacy
-        # whole-snapshot frontier dirs from pre-partitioning stores)
+        # version dirs + all-but-last-2 bloom snapshots
         self._gc_frontier_versions(kept_maps)
-        for table in ("frontier", "bloom"):
-            for old in range(round_id - 2, -1, -1):
-                path = self._p(table, old)
-                if os.path.exists(path):
-                    shutil.rmtree(path)
-                else:
-                    break
+        for old in range(round_id - 2, -1, -1):
+            path = self._p("bloom", old)
+            if not os.path.exists(path):
+                break
+            shutil.rmtree(path)
 
     def delete_urls(self, round_id: int, urls: list[str], config) -> None:
         """URL expiry / tag deletion (north_star cuckoo-deletion use case;
@@ -524,36 +505,30 @@ class StateStore:
             p = self._p("seen_delta", r)
             if os.path.exists(p):
                 shutil.rmtree(p)
-        if self.frontier_map(round_id) is None:
-            # legacy whole-snapshot layout
-            new_frontier.write.mode("overwrite").parquet(
-                self._p("frontier", round_id)
+        # deletions are rare (tag expiry): rewrite ALL partitions as a fresh
+        # full version of round_id and republish the map
+        g = self._fpart_granularity(config)
+        out_dir = self._frontier_round_dir(round_id)
+        (
+            new_frontier.withColumn(
+                "fpart",
+                F.floor(F.col("next_fetch_unix") / F.lit(g)).cast("long"),
             )
-        else:
-            # deletions are rare (tag expiry): rewrite ALL partitions as a
-            # fresh full version of round_id and republish the map
-            g = self._fpart_granularity(config)
-            out_dir = self._frontier_round_dir(round_id)
-            (
-                new_frontier.withColumn(
-                    "fpart",
-                    F.floor(F.col("next_fetch_unix") / F.lit(g)).cast("long"),
-                )
-                .write.mode("overwrite")
-                .partitionBy("fpart")
-                .parquet(out_dir)
-            )
-            fmap = {
-                int(d.split("=", 1)[1]): round_id
-                for d in os.listdir(out_dir)
-                if d.startswith("fpart=")
-            }
-            kept = {round_id: fmap}
-            prev = self.frontier_map(round_id - 1)
-            if prev is not None:
-                kept[round_id - 1] = prev
-            self._publish(round_id, config, frontier_maps=kept)
-            self._gc_frontier_versions(kept)
+            .write.mode("overwrite")
+            .partitionBy("fpart")
+            .parquet(out_dir)
+        )
+        fmap = {
+            int(d.split("=", 1)[1]): round_id
+            for d in os.listdir(out_dir)
+            if d.startswith("fpart=")
+        }
+        kept = {round_id: fmap}
+        prev = self.frontier_map(round_id - 1)
+        if prev is not None:
+            kept[round_id - 1] = prev
+        self._publish(round_id, config, frontier_maps=kept)
+        self._gc_frontier_versions(kept)
         new_bloom.write.mode("overwrite").parquet(self._p("bloom", round_id))
         # the bucketed backstop table must forget the deleted urls too
         self._rebuild_seen_bucketed(round_id, config)
@@ -562,10 +537,7 @@ class StateStore:
     def read_frontier(self, round_id: int) -> DataFrame:
         fmap = self.frontier_map(round_id)
         if fmap is None:
-            # legacy whole-snapshot layout (pre-partitioning stores)
-            return self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-                self._p("frontier", round_id)
-            )
+            raise FileNotFoundError(f"round {round_id} has no committed frontier")
         if not fmap:
             return self.spark.createDataFrame([], FRONTIER_SCHEMA)
         paths = [

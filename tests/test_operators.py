@@ -305,6 +305,22 @@ def test_bucketed_postings_probe_prunes_partitions(spark, tmp_path):
     want = {r["doc"] for r in docs_with_all(p, ["spark", "data"]).collect()}
     assert got == want == set(range(300))
 
+    # the in-process bucket memo is bounded (a long-lived searchd probes an
+    # open vocabulary) and routes every word to the bucket the JVM writer
+    # put it in
+    from aspseek_spark.operators.postings import _word_bucket
+
+    maxsize = _word_bucket.cache_info().maxsize
+    assert maxsize is not None and maxsize > 0
+    written = {
+        r["word"]: r["word_bucket"]
+        for r in spark.read.parquet(path)
+        .select("word", "word_bucket").distinct().collect()
+    }
+    assert len(written) > 20
+    for word, bucket in written.items():
+        assert _word_bucket(word, 16) == bucket, word
+
 
 def test_pagerank_sink_gets_rank(spark):
     from aspseek_spark.operators.rank import pagerank

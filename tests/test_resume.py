@@ -55,8 +55,9 @@ def test_kill_after_commit_resumes_identically(
     # data dirs exist, manifest still says round 1 → must stay invisible
     import os
 
-    os.makedirs(os.path.join(root_b, "frontier", "round=2"), exist_ok=True)
-    with open(os.path.join(root_b, "frontier", "round=2", "junk"), "w") as f:
+    partial = os.path.join(root_b, "frontier_rounds", "round=2", "fpart=0")
+    os.makedirs(partial, exist_ok=True)
+    with open(os.path.join(partial, "junk"), "w") as f:
         f.write("partial write from a crashed attempt")
     assert store_b.last_committed_round() == 1
 
@@ -81,6 +82,78 @@ def test_kill_after_commit_resumes_identically(
         .collect()
     )
     assert fr_a == fr_b
+
+
+@pytest.mark.parametrize("failure_point", ["parse_fetched", "bloom_metrics"])
+def test_failed_round_drains_its_jobs(
+    spark, tiny_web, test_config, tmp_path_factory, monkeypatch,
+    failure_point,
+):
+    """A round that raises must not leave background work running: by the
+    time the error reaches the caller, every job the round submitted has
+    finished (none can race a retry of the round over the same files), and
+    the error is the original one. Each case holds one submitted job back
+    until the injected failure has been raised."""
+    import threading
+    import time
+
+    from aspseek_spark.operators import seen as seen_ops
+    from aspseek_spark.plans import crawl_round
+
+    class Injected(RuntimeError):
+        pass
+
+    job, seeds, store = _mk_job(
+        spark, tiny_web, test_config,
+        str(tmp_path_factory.mktemp(f"drain_{failure_point}")),
+    )
+    job.ensure_init(seeds)
+    raised = threading.Event()
+    finished = threading.Event()
+
+    def boom(*a, **kw):
+        raised.set()
+        raise Injected(failure_point)
+
+    def held_back(fn):
+        def slow(*a, **kw):
+            raised.wait(60)
+            time.sleep(1.0)
+            out = fn(*a, **kw)
+            finished.set()
+            return out
+
+        return slow
+
+    if failure_point == "parse_fetched":
+        # the leftover checkpoint is submitted before the parse plan is built
+        split = crawl_round.schedule_round_split
+
+        class SlowLeftover:
+            def __init__(self, df):
+                self.localCheckpoint = held_back(df.localCheckpoint)
+
+        def slow_split(*a, **kw):
+            scheduled, leftover, persisted = split(*a, **kw)
+            return scheduled, SlowLeftover(leftover), persisted
+
+        monkeypatch.setattr(crawl_round, "schedule_round_split", slow_split)
+        monkeypatch.setattr(crawl_round, "parse_fetched", boom)
+    else:
+        # the host-salt job is submitted before the snapshot write, the
+        # probe metrics after it
+        monkeypatch.setattr(
+            job, "_write_host_salts", held_back(job._write_host_salts)
+        )
+        monkeypatch.setattr(seen_ops, "bloom_metrics", boom)
+
+    with pytest.raises(Injected, match=failure_point):
+        job.run_one(1)
+    assert finished.is_set(), "a job of the failed round is still running"
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+    assert store.last_committed_round() == (
+        0 if failure_point == "parse_fetched" else 1
+    )
 
 
 def test_stale_bloom_format_rebuilt_on_resume(

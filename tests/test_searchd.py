@@ -66,6 +66,14 @@ def test_protocol_roundtrip(daemon):
         with pytest.raises(RuntimeError):
             c.query("")
         assert c.query("alpha")  # session still serves
+        # a page far past the result window is refused before any Spark
+        # job runs — the daemon never collects (page+1)·size rows for it
+        tracker = job.spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        with pytest.raises(RuntimeError, match=r"\(page\+1\)\*size"):
+            c.query_page(1000000, 1000, "alpha")
+        assert set(tracker.getJobIdsForGroup(None)) == before
+        assert c.query("alpha")  # session still serves
     finally:
         c.close()
 
